@@ -25,7 +25,16 @@ from weather_data_pipeline_spark import registry
 from weather_data_pipeline_spark.session import tune
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
+
+def _driver_memory() -> str:
+    """Half of the host's MemTotal, between 1 and 16 GiB: the driver
+    heap must leave room for the executors' Python workers and the OS."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, min(16, kb // (2 * 1024 * 1024)))}g"
+
 
 HEADLINE = [
     "ext_q1_pricing_summary",
@@ -270,7 +279,10 @@ def main() -> None:
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("weather_data_pipeline_spark-bench")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(),
+        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -299,32 +299,52 @@ def test_min_label_propagate_multi_hop_chain(spark):
 
 
 def test_min_label_propagate_broadcast_gate_fallback(spark, monkeypatch):
-    """VERDICT r15 ask #3: the propagation broadcasts (edges and the
-    per-round nbr_min) are GATED on a bounded edge count — a broadcast
-    hint overrides Spark's size threshold, so an ungated hint on a
-    web-scale dup graph would collect it to the driver instead of
-    degrading to a shuffle join. Force the gate shut and pin that the
-    shuffle-join path converges to the identical fixpoint; pin in
-    source that BOTH hints sit behind the same gate."""
-    import inspect
-
+    """Both sides of CC_BROADCAST_EDGES reach the same fixpoint. Under
+    the gate the graph is solved on the driver, so the edge-list
+    checkpoint is the only Spark materialization. Past it the Spark
+    rounds run, and with auto-broadcast off no round plans a
+    BroadcastExchange: a broadcast hint overrides Spark's size
+    threshold, so a hint on this path would collect a web-scale dup
+    graph to the driver instead of degrading to a shuffle join."""
     from weather_data_pipeline_spark.operators import dedup
+    from weather_data_pipeline_spark.plans.inspect import executed_plan
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], "doc_a long, doc_b long"
     )
-    monkeypatch.setattr(dedup, "CC_BROADCAST_EDGES", 0)
-    got = {
-        r.doc_id: r.component
-        for r in dedup.min_label_propagate(nodes, pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
-    src = inspect.getsource(dedup.min_label_propagate)
-    assert "small = edges.count() <= CC_BROADCAST_EDGES" in src
-    # every broadcast in the function is conditioned on the gate
-    assert "F.broadcast(edges)" in src and "if small" in src
-    assert 'F.broadcast(nbr_min.alias("n")) if small' in src
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
+    plans: list[str] = []
+    frame = type(nodes)
+    checkpoint = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(executed_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+
+    def components():
+        plans.clear()
+        return {
+            r.doc_id: r.component
+            for r in dedup.min_label_propagate(nodes, pairs).collect()
+        }
+
+    assert components() == want
+    assert len(plans) == 1  # the edge list; no per-round checkpoint
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        monkeypatch.setattr(dedup, "CC_BROADCAST_EDGES", 0)
+        assert components() == want
+    finally:
+        spark.conf.set(key, saved)
+    rounds = plans[2:]  # after the edge list and the initial labels
+    assert rounds and all("Join" in p for p in rounds)
+    assert not any("BroadcastExchange" in p for p in plans)
 
 
 def test_int8_quantization_recall_floor(spark):
@@ -416,7 +436,9 @@ def test_ivf_corpus_cache_scoped(spark):
 def test_star_components_matches_min_label_on_random_graphs(spark):
     """large-star/small-star must agree with min-label propagation (and
     hence the recursive-CTE oracle) on assorted graph shapes: random
-    sparse graphs, a clique, disjoint pairs, isolated nodes."""
+    sparse graphs, a clique, disjoint pairs, isolated nodes, and a
+    60-node chain — longer than _MAX_CC_ITERS, so the Spark rounds
+    would give up on it; under the gate the driver-side pass solves it."""
     import random
 
     from weather_data_pipeline_spark.operators import dedup
@@ -427,6 +449,7 @@ def test_star_components_matches_min_label_on_random_graphs(spark):
         [(a, b) for a in range(1, 6) for b in range(a + 1, 6)],  # clique
         [(rng.randrange(1, 30), rng.randrange(1, 30)) for _ in range(25)],
         [(rng.randrange(1, 50), rng.randrange(1, 50)) for _ in range(40)],
+        [(i, i + 1) for i in range(1, 60)],  # chain, diameter 59
     ]
     for pairs_data in cases:
         pairs_data = [(a, b) for a, b in pairs_data if a != b]
@@ -1592,9 +1615,11 @@ def test_interval_coverage_no_pairs(spark):
 
 def test_soft_dedup_weights_plan(spark):
     """Soft-dedup weights compose the components machinery: the final
-    plan reads the checkpointed converged labels (ExistingRDD), adds
-    one component-keyed aggregate and a co-partitioned join-back —
-    never a nested loop, never a SinglePartition exchange."""
+    plan reads the converged labels (under CC_BROADCAST_EDGES they are
+    built on the driver, so a LocalTableScan joined onto the doc_id
+    scan), adds one component-keyed aggregate and a join-back — never
+    a nested loop, never a SinglePartition exchange, and never a re-run
+    of the pair build: every scan reads doc_id alone."""
     from weather_data_pipeline_spark.plans.inspect import executed_plan
 
     df = _Q["x2_soft_dedup_weights"](spark, SF)
@@ -1602,7 +1627,9 @@ def test_soft_dedup_weights_plan(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Exchange SinglePartition" not in plan
-    assert "ExistingRDD" in plan
+    assert "LocalTableScan" in plan
+    scans = scan_columns(df)
+    assert scans and all(cols == ["doc_id"] for cols in scans), scans
 
 
 def test_holt_winters_kernel_plan(spark):

@@ -505,15 +505,12 @@ def decontaminate_containment_flags(tr: DataFrame, ev: DataFrame) -> DataFrame:
 #: near-dup clusters; dup groups are clique-ish, so real diameters are tiny)
 _MAX_CC_ITERS = 50
 
-#: broadcast budget for the component-propagation joins, in materialized
-#: symmetric edge ROWS (two 8-byte keys each): under it the edge list and
-#: the per-round nbr_min vector ride broadcast joins (zero corpus-side
-#: exchanges per round); over it both hints are withheld so the planner
-#: falls back to a shuffle join instead of collecting a web-scale dup
-#: graph to the driver (VERDICT r15 ask #3 — a broadcast hint overrides
-#: the size threshold, it never "drops out"). Mirrors graph.py's
-#: PR_BROADCAST_NODES posture; production tunes it to the driver/executor
-#: broadcast budget.
+#: driver budget for connected components, in materialized symmetric
+#: edge ROWS (two 8-byte keys each, ~80 MB at the cap): under it the edge
+#: list is collected and solved on the driver; over it the graph stays
+#: distributed and propagation runs as shuffle-join rounds, so a
+#: web-scale dup graph is never collected. Mirrors graph.py's
+#: PR_BROADCAST_NODES posture; production tunes it to the driver budget.
 CC_BROADCAST_EDGES = 5_000_000
 
 
@@ -543,19 +540,13 @@ def x2_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``is_canonical`` marks the doc a pipeline would keep. Docs with no
     near-dup edge are their own singleton component.
 
-    Implementation is min-label propagation: labels start as own doc_id;
-    each iteration joins labels to the (doubled) edge list, takes the
-    neighborhood min, and ``localCheckpoint``s the result so lineage stays
-    flat across iterations (the standard Spark iterative-algorithm shape —
-    on a cluster this is ``checkpoint()`` to reliable storage). One
-    shuffle per iteration on doc_id; iterations bounded by cluster
-    diameter (clique-ish dup groups → 2-3 in practice), with convergence
-    detected by a did-any-label-shrink existence probe on the
-    checkpointed step — limit-1, overflow-proof at any row count. At
-    100 TB the same loop runs with the large-star/small-star optimization
-    (alternate min over full vs local neighborhoods) to collapse
-    high-diameter chains in O(log n) rounds; the join shape is identical.
-    Oracle: the identical fixpoint via a recursive reachability CTE."""
+    Implementation is ``min_label_propagate``: a near-dup graph under
+    ``CC_BROADCAST_EDGES`` edges is solved on the driver in one pass;
+    a larger one runs min-label propagation as checkpointed Spark
+    rounds (one shuffle per round, bounded by cluster diameter) —
+    ``x2_dup_components_star`` is the O(log n)-round form for
+    high-diameter graphs. Oracle: the identical fixpoint via a
+    recursive reachability CTE."""
     doc = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = x2_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     labels = min_label_propagate(doc, pairs)
@@ -567,29 +558,27 @@ def x2_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def min_label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Connected components via min-label propagation until fixpoint.
+    """Connected components: (doc_id) ``nodes`` plus undirected
+    (doc_a, doc_b) ``pairs`` → (doc_id, component), where component is
+    the min doc_id reachable.
 
-    ``nodes``: (doc_id); ``pairs``: undirected edges as (doc_a, doc_b).
-    Returns (doc_id, component) where component = min doc_id reachable."""
+    Precondition: every pair endpoint is a node (true at every call
+    site — pairs are drawn from the node table). The two paths below
+    differ on a non-node endpoint: the Spark loop never labels it, so
+    it blocks propagation, while the local pass lets it link the nodes
+    on either side.
+
+    The symmetric edge list is checkpointed and counted once. Up to
+    ``CC_BROADCAST_EDGES`` rows the whole graph fits on the driver, so
+    ``_local_components`` solves it in one numpy pass: no job per round.
+    Past the gate the driver cannot hold it, and min-label propagation
+    runs as Spark rounds with shuffle joins until no label shrinks."""
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # near-dup graphs are tiny relative to the corpus: broadcast the edge
-    # list so each propagation round is map-side (the corpus never
-    # reshuffles to meet edges). The hint is GATED on a bounded count of
-    # the materialized edge list (round 16, VERDICT r15 ask #3): a
-    # broadcast HINT does not "drop out" past the auto-broadcast
-    # threshold — Spark honors it at any estimated size, so an ungated
-    # hint on a web-scale dup graph collects the edges to the driver and
-    # OOMs where a shuffle join degrades gracefully. Past the gate both
-    # propagation joins fall back to the planner's shuffle strategy.
-    # CC_BROADCAST_EDGES rows ≈ 2·|pairs| symmetric (src, dst) longs
-    # (~16 B/row → ≤ ~80 MB framed, the graph.py PR_BROADCAST_NODES
-    # posture); the count is a metadata job over the checkpoint.
     edges = edges.localCheckpoint()
-    small = edges.count() <= CC_BROADCAST_EDGES
-    if small:
-        edges = F.broadcast(edges)
+    if edges.count() <= CC_BROADCAST_EDGES:
+        return _local_components(nodes, edges)
     labels = nodes.select("doc_id", F.col("doc_id").alias("component"))
     labels = labels.localCheckpoint()
     for _ in range(_MAX_CC_ITERS):
@@ -599,27 +588,12 @@ def min_label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             .agg(F.min("component").alias("nbr_component"))
         )
         # `shrunk` rides along in the checkpointed step so convergence is
-        # a limit-1 existence probe on materialized data — overflow-proof
-        # at any scale (the previous SUM(component) probe could alias on
-        # int64 overflow once Σ doc_id exceeds 2^63; ADVICE r4 #3) and no
-        # costlier: labels only decrease, so "no label shrank" IS the
-        # fixpoint.
-        # nbr_min is bounded by the edge list's distinct endpoints, so
-        # it broadcasts under the SAME gate as edges (round-15
-        # optimization + round-16 gate): while small, the |corpus|-row
-        # label vector never shuffles per round (before: SMJ with two
-        # exchanges per round; after: zero — the only per-round
-        # exchange left is nbr_min's own groupBy); past the gate the
-        # hint is withheld and the planner's shuffle join carries the
-        # round, trading exchanges for not OOMing the driver.
+        # a limit-1 existence probe on materialized data (a sum probe
+        # could alias on int64 overflow); labels only decrease, so "no
+        # label shrank" IS the fixpoint.
         stepped = (
             labels.alias("l")
-            .join(
-                F.broadcast(nbr_min.alias("n")) if small
-                else nbr_min.alias("n"),
-                "doc_id",
-                "left",
-            )
+            .join(nbr_min.alias("n"), "doc_id", "left")
             .select(
                 "doc_id",
                 F.least(
@@ -640,6 +614,45 @@ def min_label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             f"component labels still moving after {_MAX_CC_ITERS} rounds"
         )
     return labels
+
+
+def _local_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """``min_label_propagate`` on a driver-sized symmetric (src, dst)
+    edge list: relabel endpoints to dense indices (np.unique sorts, so
+    the smallest index is the smallest id), then alternate a min-over-
+    edges step with pointer jumping (lab = lab[lab]) until nothing
+    changes. Labels only decrease and always name a node of the same
+    component, so the fixpoint is each component's minimum; pointer
+    jumping shortcuts long chains, so a path needs far fewer steps than
+    its diameter."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = edges.toArrow()
+    src = t.column("src").to_numpy()
+    ids, idx = np.unique(
+        np.concatenate([src, t.column("dst").to_numpy()]), return_inverse=True
+    )
+    a, b = idx[: len(src)], idx[len(src):]
+    lab = np.arange(len(ids))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, b, lab[a])
+        lab = lab[lab]
+        if np.array_equal(lab, prev):
+            break
+    key_type = t.schema.field("src").type
+    labels = nodes.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "doc_id": pa.array(ids, type=key_type),
+                "c": pa.array(ids[lab], type=key_type),
+            }
+        )
+    )
+    return nodes.join(F.broadcast(labels), "doc_id", "left").select(
+        "doc_id", F.coalesce("c", "doc_id").alias("component")
+    )
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:

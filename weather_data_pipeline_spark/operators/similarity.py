@@ -3085,13 +3085,12 @@ def _nsw_oracle(e0_cte: str | None = None) -> str:
 
 @query("x3_nsw_beam", oracle=_nsw_oracle())
 def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph-based ANN — the NSW/HNSW family rung the X3 ladder lacked
-    (IVF/PQ/LSH/binary all present; VERDICT r13 ask #4): a
-    deterministic exact-cosine kNN graph (top-``NSW_M`` per node,
-    rounded-sim + vec_id total order, symmetrized) searched by
-    ``NSW_ROUNDS`` unrolled beam-expansion rounds from the fixed entry
-    node ``NSW_ENTRY`` — each round expands the beam's neighbors and
-    keeps the top-``NSW_BEAM`` by (sim DESC, vec_id). This is the
+    """Graph-based ANN — the NSW rung of the X3 ladder: a deterministic
+    exact-cosine kNN graph (top-``NSW_M`` per node, rounded-sim +
+    vec_id total order, symmetrized) searched by ``NSW_ROUNDS``
+    unrolled beam-expansion rounds from the fixed entry node
+    ``NSW_ENTRY`` — each round expands the beam's neighbors and keeps
+    the top-``NSW_BEAM`` by (sim DESC, vec_id). This is the
     single-layer NSW search loop (Malkov et al. 2014, public
     algorithm) with a fixed round budget instead of a convergence
     test, which is what makes the oracle expressible (the
@@ -3102,28 +3101,24 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: every similarity is the shared sequential-fold dot
     product rounded to 6 BEFORE any ranking (the cosine-rung
-    contract); every window carries the vec_id tiebreak; candidate
-    sets are DISTINCT unions, so revisits are idempotent.
+    contract); every ranking carries the vec_id tiebreak; candidate
+    sets are distinct unions, so revisits are idempotent.
 
-    Scale shape: the INDEX BUILD broadcasts the corpus matrix into a
-    single mapInPandas pass (guarded by MAX_BROADCAST_VECTORS — the
-    documented ceiling for every broadcast-arm rung here); per-row
-    top-M selection happens inside the Arrow batch, so the graph
-    materializes as one |V|·M edge frame with no all-pairs shuffle.
-    At 100 TB the build swaps to the LSH-blocked candidate
-    generation implemented in ``x3_nsw_beam_blocked`` (multi-probe
-    bucket equi-join feeding the same top-M contract — the fail-fast
-    below points there); the SEARCH side is already scale-shaped — per
-    round one |beam|-keyed equi-join against the edge frame and one
-    per-query window over ≤ B·(2M+1) candidate rows, with the
-    query-sim table built once (one corpus scan) and reused by every
-    round."""
+    Paths: the exact build needs the whole corpus on the driver, so it
+    is hard-gated on ``MAX_BROADCAST_VECTORS`` and fails fast past it,
+    naming ``x3_nsw_beam_blocked`` — the LSH-blocked build whose graph
+    and search (``_nsw_beam_loop``) stay distributed at any size. Under
+    the gate the corpus is broadcast to one ``mapInPandas`` pass that
+    selects each row's top-M inside the Arrow batch (no all-pairs
+    shuffle); its ≤ M·|V| edges come back to the driver, where the
+    search runs in ``_nsw_beam_local`` — the driver already holds
+    everything the rounds read, so they cost no Spark jobs."""
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    rows = emb.sort("vec_id").collect()
+    rows = emb.collect()
     assert len(rows) <= MAX_BROADCAST_VECTORS, (
         f"corpus {len(rows)} exceeds MAX_BROADCAST_VECTORS="
         f"{MAX_BROADCAST_VECTORS}: use x3_nsw_beam_blocked (the "
@@ -3131,19 +3126,16 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast pass)"
     )
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    by_id = np.argsort(ids)
+    ids = ids[by_id]
+    mat = np.array([r[1] for r in rows], dtype=np.float64)[by_id]
     norms = _seq_self_norms(mat)
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
     def knn_edges(batches):
-        # NOTE (round-15 measurement): a fully block-vectorized variant
-        # of this kernel (dim-fold outer-product accumulation + the
-        # _nsw_block_topm composite-key argsort) was built and A/B'd at
-        # sf0.1 — it measured ~2x SLOWER warm (1.5 s -> 3.3 s for the
-        # edge build) because its 64 (batch x corpus) float64
-        # temporaries saturate memory bandwidth across 32 concurrent
-        # Python workers, while this per-row form's 5k-element
-        # temporaries stay cache-resident. Kept row-wise deliberately.
+        # Row-wise on purpose: each row's corpus-length temporaries stay
+        # cache-resident, where a block-vectorized (batch x corpus) form
+        # saturates memory bandwidth across concurrent Python workers.
         b_ids, b_mat, b_norms = bc.value
         for pdf in batches:
             src_ids = pdf["vec_id"].to_numpy()
@@ -3164,48 +3156,63 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out_dst.extend(mids[order])
             yield pd.DataFrame({"src": out_src, "dst": out_dst})
 
-    knn = emb.mapInPandas(knn_edges, schema="src long, dst long")
-    edges = (
-        knn.unionByName(
-            knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    knn = emb.mapInPandas(knn_edges, schema="src long, dst long").toArrow()
+    return spark.createDataFrame(
+        _nsw_beam_local(
+            ids,
+            mat,
+            norms,
+            knn.column("src").to_numpy(),
+            knn.column("dst").to_numpy(),
         )
-        .distinct()
-        .localCheckpoint(eager=True)  # read once per round
-        .withColumnRenamed("src", "vec_id")
     )
 
-    q_mask = ids < N_QUERIES
-    q_ids, q_mat, q_norms = ids[q_mask], mat[q_mask], norms[q_mask]
 
-    def qsims_fn(batches):
-        for pdf in batches:
-            c_ids = pdf["vec_id"].to_numpy()
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_norms = _seq_self_norms(c_mat)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                s = _seq_dot(c_mat, q_mat[qi]) / (q_norms[qi] * c_norms)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": int(qid),
-                            "vec_id": c_ids,
-                            "sim": np.round(s, 6),
-                        }
-                    )
-                )
-            if out:  # q_ids can be empty (ADVICE r14: corpus without
-                yield pd.concat(out, ignore_index=True)  # query vectors)
+def _nsw_beam_local(
+    ids: "np.ndarray",
+    mat: "np.ndarray",
+    norms: "np.ndarray",
+    src: "np.ndarray",
+    dst: "np.ndarray",
+) -> "pa.Table":
+    """``_nsw_beam_loop`` on the driver, for a corpus it already holds:
+    the same rounds, candidate sets and (sim DESC, vec_id) order, with
+    each query's sims from the same rounded sequential-fold cosine, so
+    the rows are bit-identical. ``ids`` is sorted and
+    indexes ``mat``/``norms``; (``src``, ``dst``) are the directed
+    top-M kNN edges as vec_ids. Returns (query_id, beam_rank, vec_id,
+    sim) as an Arrow table — built without a Python-worker pass."""
+    import pyarrow as pa
 
-    qsims = emb.mapInPandas(
-        qsims_fn, schema="query_id long, vec_id long, sim double"
-    ).localCheckpoint(eager=True)  # read by every round + the emit
-
-    beam = spark.createDataFrame(
-        [(int(q), NSW_ENTRY) for q in sorted(q_ids)],
-        "query_id long, vec_id long",
+    n = len(ids)
+    s, d = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    key = np.unique(np.concatenate([s * n + d, d * n + s]))
+    nbr = key % n
+    start = np.searchsorted(key // n, np.arange(n + 1))
+    entry = np.searchsorted(ids, NSW_ENTRY)
+    seed = [entry] if entry < n and ids[entry] == NSW_ENTRY else []
+    out: dict[str, list] = {"query_id": [], "beam_rank": [], "vec_id": [], "sim": []}
+    for qi in np.flatnonzero(ids < N_QUERIES):
+        sims = np.round(_seq_dot(mat, mat[qi]) / (norms[qi] * norms), 6)
+        beam = np.array(seed, dtype=np.int64)
+        for _ in range(NSW_ROUNDS):
+            cand = np.unique(
+                np.concatenate([beam] + [nbr[start[v] : start[v + 1]] for v in beam])
+            )
+            cand = cand[cand != qi]
+            beam = cand[np.lexsort((cand, -sims[cand]))[:NSW_BEAM]]
+        out["query_id"] += [int(ids[qi])] * len(beam)
+        out["beam_rank"] += range(1, len(beam) + 1)
+        out["vec_id"] += ids[beam].tolist()
+        out["sim"] += sims[beam].tolist()
+    return pa.table(
+        {
+            "query_id": pa.array(out["query_id"], pa.int64()),
+            "beam_rank": pa.array(out["beam_rank"], pa.int64()),
+            "vec_id": pa.array(out["vec_id"], pa.int64()),
+            "sim": pa.array(out["sim"], pa.float64()),
+        }
     )
-    return _nsw_beam_loop(beam, edges, qsims)
 
 
 def _nsw_beam_rounds(
@@ -3215,23 +3222,26 @@ def _nsw_beam_rounds(
     rounds: int,
     beam_width: int,
 ) -> DataFrame:
-    """``rounds`` beam-expansion rounds: expand-beam-by-neighbors →
-    keep top-``beam_width`` by (sim DESC, vec_id). Returns the final
-    (query_id, vec_id) beam frame. ``edges`` columns: (vec_id, dst);
-    ``qsims`` columns: (query_id, vec_id, sim) — both should be
-    localCheckpointed by the caller (read once / many times). The
-    expansion UNIONS the current beam before ranking, so a node whose
-    layer has no edges (an HNSW entry carried into a sparse layer)
-    persists rather than vanishing."""
+    """``rounds`` beam-expansion rounds as Spark joins: expand-beam-by-
+    neighbors → keep top-``beam_width`` by (sim DESC, vec_id). Returns
+    the final (query_id, vec_id) beam frame. ``edges`` columns:
+    (vec_id, dst); ``qsims`` columns: (query_id, vec_id, sim) — both
+    should be localCheckpointed by the caller (read once / many times).
+
+    This is the search path for graphs the driver cannot hold: the
+    LSH-blocked NSW build and every HNSW layer. (``x3_nsw_beam``'s
+    exact build is gated to a driver-held corpus and searches locally
+    in ``_nsw_beam_local``.) The expansion UNIONS the current beam
+    before ranking, so a node whose layer has no edges (an HNSW entry
+    carried into a sparse layer) persists rather than vanishing."""
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "vec_id")
     for r in range(rounds):
-        # ONE query_id exchange per round (round-15 optimization, guide
-        # §2.4 "two operations keyed the same way share one exchange"):
-        # the explicit repartition("query_id") satisfies BOTH the
-        # distinct's ClusteredDistribution(query_id, vec_id) — a subset
-        # hash partitioning co-locates every (query_id, vec_id) — and
-        # the rank window's partitionBy(query_id), so neither inserts
-        # its own exchange. Per-query candidate volume is bounded at
+        # One query_id exchange per round: the explicit
+        # repartition("query_id") satisfies BOTH the distinct's
+        # ClusteredDistribution(query_id, vec_id) — a subset hash
+        # partitioning co-locates every (query_id, vec_id) — and the
+        # rank window's partitionBy(query_id), so neither inserts its
+        # own exchange. Per-query candidate volume is bounded at
         # B·(2M+1) rows by construction, so the key is skew-safe at any
         # corpus size.
         expanded = (
@@ -3250,12 +3260,10 @@ def _nsw_beam_rounds(
             .filter(F.col("rn") <= beam_width)
             .select("query_id", "vec_id")
         )
-        # flat lineage every SECOND round (the Pregel localCheckpoint
-        # convention, cadence measured in round 15: per-round
-        # checkpoints paid one materialization job per round while the
-        # two-round lazy segment costs the same two exchanges — ~12%
-        # off the search loop at sf0.1; every 4th round regressed,
-        # plan depth beats job count past 2)
+        # flat lineage every SECOND round: a per-round checkpoint pays
+        # one materialization job per round, while the two-round lazy
+        # segment costs the same two exchanges; plan depth outweighs
+        # job count past two rounds
         if (r + 1) % 2 == 0 or r == rounds - 1:
             beam = beam.localCheckpoint(eager=True)
     return beam
@@ -3264,10 +3272,10 @@ def _nsw_beam_rounds(
 def _nsw_beam_loop(
     beam: DataFrame, edges: DataFrame, qsims: DataFrame
 ) -> DataFrame:
-    """The shared NSW search loop (identical for the exact and the
-    blocked graph builds): ``NSW_ROUNDS`` rounds of expand-beam-by-
-    neighbors → keep top-``NSW_BEAM`` by (sim DESC, vec_id)
-    (``_nsw_beam_rounds``), then the final ranked emit."""
+    """The distributed NSW search (``x3_nsw_beam_blocked``):
+    ``NSW_ROUNDS`` rounds of expand-beam-by-neighbors → keep
+    top-``NSW_BEAM`` by (sim DESC, vec_id) (``_nsw_beam_rounds``),
+    then the final ranked emit."""
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "vec_id")
     beam = _nsw_beam_rounds(beam, edges, qsims, NSW_ROUNDS, NSW_BEAM)
     return (
@@ -3446,9 +3454,9 @@ def x3_nsw_beam_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
       2^P grown with log|V| (more planes at bigger corpora) the
       per-bucket population, and so the per-vector candidate count,
       stays bounded;
-    - search: the SHARED ``_nsw_beam_loop`` (identical rounds,
-      windows, tiebreaks) over query sims built by one broadcast
-      cross-join of the ``N_QUERIES`` query vectors against the
+    - search: ``_nsw_beam_loop`` (the exact rung's rounds, ranking
+      and tiebreaks, run as Spark joins) over query sims built by one
+      broadcast cross-join of the ``N_QUERIES`` query vectors against the
       corpus — the x3_cosine_topk shape, JVM-side.
 
     Unlike the exact rung there is NO driver-side corpus collect and

@@ -93,8 +93,8 @@ _PRIORITY: tuple[str, ...] = (
     "o15_latest_per_key",  # flagship (also entry())
     "w_corrupt_quarantine",  # r2 hash-fail regression pin
     "x6_session_windows",  # r2 hash-fail regression pin
-    # --- round-15 STALENESS rotation (32; VERDICT r14 ask #2): ALL
-    # thirty-two r8-stale rows — the oldest oracle-bearing tier in the
+    # --- round-15 STALENESS rotation (30 of 32; VERDICT r14 ask #2):
+    # the r8-stale rows — the oldest oracle-bearing tier in the
     # union (includes the ext_q16 filler displaced from r14). With
     # these in-window nothing oracle-bearing is staler than r9.
     "ext_bloom_join_prune",
@@ -124,10 +124,8 @@ _PRIORITY: tuple[str, ...] = (
     "x6_seasonal_baseline",
     "x8_budget_select_scalable",
     "x8_c4_pipeline",
-    "x8_interleave_sources",
     "x8_length_buckets_scalable",
     "x8_sequence_pack",
-    "x8_temperature_mixture",
     "x8_tokenize_to_ids",
     # --- rows-only band twins (5 of 6; VERDICT r14 ask #8): a
     # driver-signed row for the band twin of each engine-specific
@@ -153,6 +151,13 @@ _PRIORITY: tuple[str, ...] = (
     "x4_unigram_train",
     "x4_unigram_apply",
     "s_cdc_chunk_stream",
+    # --- changed-rung re-entries (2): the record-linkage pair, whose
+    # connected components now solve on the driver under
+    # CC_BROADCAST_EDGES. They displace two r8-stale x8 rows
+    # (x8_interleave_sources, x8_temperature_mixture), whose
+    # r8/r15/r16 rows stand in the union.
+    "x2_record_linkage",
+    "s_record_linkage_stream",
     # --- family representatives (5): sole-member families stay
     # in-window every round (CDC, cogroup); the x5/x7/x9 reps are the
     # OLDEST-driver-checked oracle-bearing members of families the
@@ -272,10 +277,10 @@ _R8_WINDOW_ROTATED_OUT: tuple[str, ...] = (
 #: hierarchical-NSW rung, added mid-r15 after the window froze) was
 #: parity-swept at all three SFs in-session per the pre-registration
 #: checklist and takes the x2_simhash_invariants-declared r16 head.
+#: x2_record_linkage and s_record_linkage_stream have since moved into
+#: the window as changed rungs.
 _R15_QUEUE: set[str] = {
     "x3_hnsw_beam",
-    "x2_record_linkage",
-    "s_record_linkage_stream",
 }
 
 
