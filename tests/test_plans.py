@@ -2179,12 +2179,18 @@ def test_bfs_reach_final_plan_is_checkpoint_rollup(spark):
 
 def test_bfs_reach_invariants(spark):
     """BFS reach rollup: hop levels bounded by BFS_MAX_HOP (plus -1 for
-    unreached), counts partition the node universe exactly, and the
-    bipartite trade graph forces strict level alternation — even hops
-    are customers-only, odd hops suppliers-only (seeds are customers)."""
+    unreached), hop stays IntegerType, counts partition the node
+    universe exactly, and the bipartite trade graph forces strict level
+    alternation — even hops are customers-only, odd hops suppliers-only
+    (seeds are customers)."""
+    from pyspark.sql.types import IntegerType
+
     from weather_data_pipeline_spark.operators.graph import BFS_MAX_HOP
 
-    rows = _Q["x9_bfs_reach"](spark, SF).collect()
+    df = _Q["x9_bfs_reach"](spark, SF)
+    # the kernel's dist is long; the cast must keep the schema's hop int
+    assert isinstance(df.schema["hop"].dataType, IntegerType)
+    rows = df.collect()
     hops = {r["hop"] for r in rows}
     assert hops <= {-1} | set(range(BFS_MAX_HOP + 1))
     assert 0 in hops  # the seed level is never empty

@@ -78,7 +78,7 @@ def naive_apply(spark: SparkSession, sf_dir: str):
 def main() -> None:
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0)))}]"
         )
         .appName("bpe-ab")
         .config("spark.ui.enabled", "false")

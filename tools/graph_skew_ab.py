@@ -92,7 +92,7 @@ def _time(qs, name, spark, sf_dir) -> float:
 def main() -> int:
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0)))}]"
         )
         .appName("graph-skew-ab")
         .config("spark.ui.enabled", "false")
@@ -145,8 +145,8 @@ def main() -> int:
             "same celebrity replica: the hot node survives the "
             "strength thinning with ~10x'd degree and fans the "
             "frontier out to the grown supplier universe in one hop - "
-            "the frontier join broadcasts (skew-immune) and the dst "
-            "DISTINCT partial-aggregates map-side, so no hot reducer; "
+            "the frontier join broadcasts (skew-immune) and the "
+            "candidate min partial-aggregates map-side, so no hot reducer; "
             "degradation tracks edge volume, not hot-node degree"
         ),
         "x9_sssp_weighted": (

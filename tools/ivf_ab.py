@@ -54,7 +54,7 @@ def build_full_shuffle(df):
 def main() -> None:
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0)))}]"
         )
         .appName("ivf-ab")
         .config("spark.ui.enabled", "false")

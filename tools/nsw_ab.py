@@ -69,7 +69,7 @@ def beam_recall(spark: SparkSession, sf_dir: str, arm) -> float:
 def main() -> None:
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0)))}]"
         )
         .appName("nsw-ab")
         .config("spark.ui.enabled", "false")

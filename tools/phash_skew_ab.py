@@ -65,7 +65,7 @@ def _time(df_fn) -> float:
 def main() -> int:
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0)))}]"
         )
         .appName("phash-skew-ab")
         .config("spark.ui.enabled", "false")

@@ -86,7 +86,7 @@ def _time(qs, name, spark, sf_dir) -> float:
 def main() -> int:
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0)))}]"
         )
         .appName("span-skew-ab")
         .config("spark.ui.enabled", "false")

@@ -22,7 +22,7 @@ Reference parity: no graph ops in the reference (440-line pandas ETL);
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -45,19 +45,16 @@ SUPP_OFFSET = 100_000_000
 #: takes the shuffle path automatically.
 PR_BROADCAST_NODES = 5_000_000
 
-#: LPA per-round exchange form, chosen from a bounded edge-count probe
-#: (round 16, VERDICT r15 finding #2): UNDER this many symmetric edge
-#: rows the explicit repartition("src") form wins — one exchange per
-#: round instead of two, and at overhead-dominated sizes the saved
-#:  exchange is the whole game (measured ~11-17% at sf0.1). OVER it the
-#: two-exchange partial-agg form wins: the (src,label) combiners ship
-#: far fewer bytes than |edges| joined rows once labels converge (the
-#: 100-copy replica measured the one-exchange form at 69.2 s vs the
-#: partial-agg form's 56.7 s — byte volume beats exchange count at
-#: scale, exactly the flip the round-15 comment predicted). 20M rows
-#: ≈ 320 MB of (src,label) pairs — comfortably before byte volume
-#: dominates on a real network; production tunes it to measured
-#: combiner reduction.
+#: LPA per-round exchange form (rounds ≥ 1), picked by one count over
+#: the checkpointed symmetric edge list. UNDER the gate an explicit
+#: repartition("src") serves both the (src, label) count and the
+#: per-src argmax, so each round pays ONE exchange — this form optimises
+#: per-exchange fixed cost. OVER it the classic two-exchange partial-agg
+#: form ships per-map-distinct (src, label) combiners instead of every
+#: joined edge row — this form optimises shuffle bytes once labels
+#: converge. Both forms yield identical labels. The only same-box
+#: 100-copy reading (one-exchange 82.1 s vs partial-agg 85.1 s) was
+#: within noise, so the threshold's benefit is unverified.
 LPA_ONE_EXCHANGE_MAX_EDGES = 20_000_000
 
 
@@ -75,6 +72,63 @@ def _edges_sql() -> str:
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       )
     """
+
+
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct customer→supplier trade pairs (src, dst), supplier keys
+    offset — the inner SELECT of ``_edges_sql``."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(
+            F.col("o_custkey").alias("src"),
+            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetric trade edge list of ``_edges_sql``, materialized
+    once so every round of an iterative rung reads it instead of
+    re-running the orders⋈lineitem build (53 exchanges → 13 for
+    PageRank at N_ITER=3). localCheckpoint rather than cache(): the
+    blocks live as long as the returned DataFrame, so ContextCleaner
+    frees them once the caller drops the result (no per-sf_dir cache
+    entries pinned for the session), and round lineage is truncated.
+    Cluster caveat: a lost executor loses checkpoint partitions; a
+    long-lived job would set a reliable checkpoint dir."""
+    base = _trade_pairs(spark, sf_dir)
+    return base.unionAll(
+        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
+
+
+def _node_rollup(df: DataFrame, key: Column | str) -> DataFrame:
+    """Per-``key`` rollup of a (node, key) frame: node count,
+    customer/supplier split, smallest member — the output of LPA, BFS
+    and SSSP. ``_node_rollup_sql`` is its DuckDB twin."""
+    return df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
+        .cast("long")
+        .alias("n_customers"),
+        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
+        .cast("long")
+        .alias("n_suppliers"),
+        F.min("node").alias("min_node"),
+    )
+
+
+def _node_rollup_sql() -> str:
+    """The aggregate columns of ``_node_rollup`` over a ``node`` column."""
+    return f"""COUNT(*) AS n_nodes,
+           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_customers,
+           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_suppliers,
+           MIN(node) AS min_node"""
 
 
 def _pagerank_oracle() -> str:
@@ -128,29 +182,7 @@ def x9_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration; only the rank vector (|nodes| rows) changes. Emitted
     ranks floor-truncate at 1e-9 (ranks are O(1/N) — 6 decimals would
     flatten them)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.unionAll(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    # iteration-invariant: materialized once (eager), read by every step —
-    # without reuse each step re-runs the orders⋈lineitem edge build
-    # (measured: 53 exchanges → 13 at N_ITER=3). localCheckpoint instead
-    # of cache() (ADVICE/VERDICT r6 #4): storage follows the RDD's
-    # driver-side lifetime, so ContextCleaner frees it once the caller
-    # drops the result — no per-sf_dir MEMORY_AND_DISK entries pinned for
-    # the session (the cache-churn failure mode of the first scale-bench
-    # run). It also truncates the iteration lineage. Cluster caveat: a
-    # lost executor loses checkpoint partitions; a long-lived production
-    # job would set a reliable checkpoint dir and use checkpoint() here.
+    edges = _trade_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     ).localCheckpoint(eager=True)
@@ -417,17 +449,7 @@ def x9_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial-aggregated count, nothing materialized). Checkpointing
     pays off for expensive subtrees (the bigram LM); here the subtree
     is one broadcast join + distinct."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    deg = base.select(
+    deg = _trade_pairs(spark, sf_dir).select(
         F.explode(F.array("src", "dst")).alias("node")
     ).groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     return deg.groupBy(
@@ -472,12 +494,7 @@ def _lpa_oracle() -> str:
     WITH edges AS ({_edges_sql()}),
     lab0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)
     {"".join(rounds)}
-    SELECT label AS community, COUNT(*) AS n_nodes,
-           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_suppliers,
-           MIN(node) AS min_node
+    SELECT label AS community, {_node_rollup_sql()}
     FROM lab{LPA_ROUNDS} GROUP BY label
     """
 
@@ -502,21 +519,8 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src,label) count exchange and a max_by(label, (cnt,-label))
     argmax per src — the same struct-ordered engine-exact pick as the
     oracle's ROW_NUMBER. Label vectors localCheckpoint per round
-    (truncated lineage, same ADVICE r6 #4 rationale as PageRank's
-    edge build)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.unionAll(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    (truncated lineage, the ``_trade_edges`` rationale)."""
+    edges = _trade_edges(spark, sf_dir)
     # round 16 (VERDICT r15 finding #2 + guide §2.3 "aggregate before
     # you shuffle"): round 0 collapses to min-neighbor-id. Labels start
     # as the node's own id, so round 0's joined label IS dst and —
@@ -541,22 +545,6 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = labels.count()  # |nodes| — metadata job over the materialized r0
     small = n <= PR_BROADCAST_NODES
-    # Rounds ≥ 1: the per-round exchange form is GATED on a bounded
-    # edge-count probe instead of hard-coding either shape (VERDICT r15
-    # finding #2). UNDER the gate: ONE src exchange per round (round-15,
-    # guide §2.4 "operations keyed the same way share one exchange") —
-    # the explicit repartition("src") satisfies BOTH the (src, label)
-    # count's ClusteredDistribution (subset hash partitioning) and the
-    # per-src argmax's, so neither aggregation inserts its own exchange;
-    # measured ~11-17% off the rung at sf0.1 where per-exchange fixed
-    # overhead dominates. OVER the gate: the classic two-exchange
-    # partial-agg form — it ships per-map-distinct (src,label) combiners
-    # where the repartition ships every |edges| joined row, and once
-    # labels converge (map-side duplication ≥ 2x) combiner bytes win;
-    # the 100-copy replica measured the one-exchange form slower (82.1 s
-    # vs the partial-agg 85.1 s same-box was within noise, but the
-    # driver's cross-box refresh read 69.2 vs 56.7 — the predicted
-    # flip). The probe is a metadata count over the eager checkpoint.
     for r in range(1, LPA_ROUNDS):
         lv = labels.withColumnRenamed("node", "dst")
         joined = edges.join(F.broadcast(lv) if small else lv, "dst")
@@ -578,16 +566,7 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (broadcast label join + one partial-agg exchange) for
             # the plan gate, and skips one |nodes|-row materialization
             labels = labels.localCheckpoint(eager=True)
-    return labels.groupBy(F.col("label").alias("community")).agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_customers"),
-        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_suppliers"),
-        F.min("node").alias("min_node"),
-    )
+    return _node_rollup(labels, F.col("label").alias("community"))
 
 
 # ----------------------------------------------------------------------
@@ -665,19 +644,7 @@ def x9_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ContextCleaner, bounding residency at ~2 snapshots), and the
     returned merge table is a local relation of those K rows —
     nothing data-sized reaches the driver either way."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.unionAll(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = _trade_edges(spark, sf_dir)
     rounds: list[tuple] = []
     # Per-round degree table, materialized once and consumed TWICE
     # (round-15 optimization): the keep filter AND the round's stats
@@ -878,7 +845,7 @@ def x9_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------------------------
 # multi-source BFS reach (round 12): the taint-propagation kernel —
-# hop-bounded frontier expansion with the visited set as mergeable state
+# hop-bounded frontier expansion, run on the shared SSSP kernel
 # ----------------------------------------------------------------------
 #: hop bound (unrolled in the oracle; loop + early-stop here). Chosen so
 #: the sf0.01 trade graph exposes a 5-level frontier curve
@@ -898,21 +865,76 @@ BFS_SEED_NATION = 3
 BFS_MIN_ORDERS = 3
 
 
-def _bfs_edges_sql() -> str:
-    """Strength-thinned symmetric trade edges (DuckDB side)."""
+def _strength_graph_sql(w: str) -> str:
+    """DuckDB twin of ``_strength_graph``: the ``base``, ``edges``,
+    ``nodes`` and ``seeds`` CTEs, ``w`` an expression over
+    ``strength``."""
     return f"""
       base AS (
-        SELECT o_custkey AS c, l_suppkey + {SUPP_OFFSET} AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        GROUP BY 1, 2
-        HAVING COUNT(DISTINCT o_orderkey) >= {BFS_MIN_ORDERS}
+        SELECT c, s, {w} AS w FROM (
+          SELECT o_custkey AS c, l_suppkey + {SUPP_OFFSET} AS s,
+                 COUNT(DISTINCT o_orderkey) AS strength
+          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+          GROUP BY 1, 2
+        ) WHERE strength >= {BFS_MIN_ORDERS}
       ),
       edges AS (
-        SELECT c AS src, s AS dst FROM base
+        SELECT c AS src, s AS dst, w FROM base
         UNION ALL
-        SELECT s AS src, c AS dst FROM base
+        SELECT s AS src, c AS dst, w FROM base
+      ),
+      nodes AS (SELECT DISTINCT src AS node FROM edges),
+      seeds AS (
+        SELECT DISTINCT e.src AS node FROM edges e
+        JOIN customer ON c_custkey = e.src
+        WHERE c_nationkey = {BFS_SEED_NATION} AND e.src < {SUPP_OFFSET}
       )
     """
+
+
+def _strength_graph(
+    spark: SparkSession, sf_dir: str, w: Column
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The strength-thinned trade graph that BFS and SSSP traverse, as
+    (edges, seeds, nodes). ``edges`` is the symmetric (src, dst, w)
+    list of customer↔supplier pairs sharing ≥ ``BFS_MIN_ORDERS``
+    distinct orders, ``w`` evaluated over that per-pair ``strength``;
+    the thinning is ONE partial-aggregated (cust, supp) exchange
+    (HAVING over countDistinct — map-side partials first) and the list
+    localCheckpoints once, so every round and the node universe read
+    one materialization. ``seeds`` is every in-graph customer of
+    ``BFS_SEED_NATION``; ``nodes`` is every node with an edge."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    customer = load_table(spark, sf_dir, "customer")
+    base = (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .groupBy(
+            F.col("o_custkey").alias("c"),
+            (F.col("l_suppkey") + SUPP_OFFSET).alias("s"),
+        )
+        .agg(F.countDistinct("o_orderkey").alias("strength"))
+        .filter(F.col("strength") >= BFS_MIN_ORDERS)
+        .select("c", "s", w.alias("w"))
+    )
+    edges = base.select(
+        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
+    ).unionAll(
+        base.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
+    ).localCheckpoint(eager=True)
+    nodes = edges.select("src").distinct().select(F.col("src").alias("node"))
+    seeds = (
+        edges.filter(F.col("src") < SUPP_OFFSET)
+        .join(
+            customer.filter(
+                F.col("c_nationkey") == BFS_SEED_NATION
+            ).select(F.col("c_custkey").alias("src")),
+            "src",
+        )
+        .select(F.col("src").alias("node"))
+        .distinct()
+    )
+    return edges, seeds, nodes
 
 
 def _bfs_oracle() -> str:
@@ -933,68 +955,16 @@ def _bfs_oracle() -> str:
       SELECT node, {i} AS hop FROM f{i}
     )""")
     return f"""
-    WITH {_bfs_edges_sql()},
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    vis0 AS (
-      SELECT DISTINCT e.src AS node, 0 AS hop FROM edges e
-      JOIN customer ON c_custkey = e.src
-      WHERE c_nationkey = {BFS_SEED_NATION} AND e.src < {SUPP_OFFSET}
-    )
+    WITH {_strength_graph_sql("1")},
+    vis0 AS (SELECT node, 0 AS hop FROM seeds)
     {"".join(steps)}
-    SELECT hop, COUNT(*) AS n_nodes,
-           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_suppliers,
-           MIN(node) AS min_node
+    SELECT hop, {_node_rollup_sql()}
     FROM (
       SELECT n.node, COALESCE(v.hop, -1) AS hop
       FROM nodes n LEFT JOIN vis{BFS_MAX_HOP} v ON v.node = n.node
     )
     GROUP BY hop
     """
-
-
-def bfs_hops(seeds: DataFrame, edges: DataFrame, max_hop: int) -> DataFrame:
-    """Hop-bounded multi-source BFS kernel: ``seeds`` is a (node)
-    frame, ``edges`` a directed (src, dst) frame (pass both directions
-    for an undirected walk); returns (node, hop) with the MINIMUM hop
-    per reached node. Each hop: one frontier⋈edges equi-join (frontier
-    broadcasts under ``PR_BROADCAST_NODES``, keyed shuffle past it),
-    one |V|-bounded DISTINCT, one anti-join against the visited
-    vector; visited localCheckpoints per round (truncated lineage) and
-    the early-stop probe counts an already-materialized ≤|V|-row
-    frontier. Extracted from the query body so hypothesis can drive it
-    on arbitrary graphs against a reference BFS."""
-    visited = seeds.select("node").distinct().withColumn(
-        "hop", F.lit(0)
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    # probe the SEED count too (bounded job over the materialized
-    # checkpoint) — a web-scale origin set must not broadcast blindly
-    small_graph = visited.count() <= PR_BROADCAST_NODES
-    for h in range(1, max_hop + 1):
-        nxt = (
-            edges.join(
-                F.broadcast(frontier.withColumnRenamed("node", "src"))
-                if small_graph
-                else frontier.withColumnRenamed("node", "src"),
-                "src",
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-        )
-        visited = visited.unionAll(nxt).localCheckpoint(eager=True)
-        if h == max_hop:
-            break  # final hop: the early-stop probe's result is unused
-        frontier = visited.filter(F.col("hop") == h).select("node")
-        n_new = frontier.count()  # ≤|V| rows, already materialized
-        if n_new == 0:
-            break
-        small_graph = n_new <= PR_BROADCAST_NODES
-    return visited
 
 
 @query("x9_bfs_reach", oracle=_bfs_oracle())
@@ -1011,64 +981,21 @@ def x9_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope: no graph ops in the reference (440-line pandas
     ETL); §2.10 extension tier.
 
-    Scale shape: edge thinning is ONE partial-aggregated (cust,supp)
-    exchange (HAVING over countDistinct — map-side partials first);
-    edges localCheckpoint once (shared by every hop and the node
-    universe, the x9 house pattern). Each hop is one frontier⋈edges
-    equi-join (frontier ≤ |V| narrow rows — broadcast under
-    ``PR_BROADCAST_NODES``, keyed shuffle past it, the web-scale
-    shape), one |V|-bounded DISTINCT exchange, and one anti-join
-    against the visited vector; the visited vector localCheckpoints
-    per round (truncated lineage, the ADVICE r6 #4 rationale). The
-    early-stop probe counts an already-materialized ≤|V|-row frontier
-    — bounded driver traffic, never data-sized. Unreached nodes come
-    from ONE left-anti join of the node universe at the end. Whole
-    rounds move |E| + |V| rows each — linear frontier BFS, never the
-    |V|² transitive closure."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    customer = load_table(spark, sf_dir, "customer")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("s"),
-        )
-        .agg(F.countDistinct("o_orderkey").alias("strength"))
-        .filter(F.col("strength") >= BFS_MIN_ORDERS)
-        .select("c", "s")
+    BFS is ``sssp_rounds`` on unit weights: the minimum cost over
+    ≤ ``BFS_MAX_HOP``-edge paths is the minimum hop, so BFS and SSSP
+    share one traversal kernel and one graph build
+    (``_strength_graph``). ``hop`` is that dist cast to int, so the
+    output schema keeps ``hop int``. Each hop moves |frontier⋈edges| +
+    |V| rows — linear frontier BFS, never the |V|² transitive closure;
+    unreached nodes come from ONE left join of the node universe at
+    the end."""
+    edges, seeds, nodes = _strength_graph(spark, sf_dir, F.lit(1))
+    dist = sssp_rounds(seeds, edges, BFS_MAX_HOP)
+    reach = nodes.join(dist, "node", "left").select(
+        "node",
+        F.coalesce(F.col("dist").cast("int"), F.lit(-1)).alias("hop"),
     )
-    edges = base.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).unionAll(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    ).localCheckpoint(eager=True)
-    nodes = edges.select("src").distinct().select(F.col("src").alias("node"))
-    seeds = (
-        edges.filter(F.col("src") < SUPP_OFFSET)
-        .join(
-            customer.filter(
-                F.col("c_nationkey") == BFS_SEED_NATION
-            ).select(F.col("c_custkey").alias("src")),
-            "src",
-        )
-        .select(F.col("src").alias("node"))
-        .distinct()
-    )
-    visited = bfs_hops(seeds, edges, BFS_MAX_HOP)
-    reach = nodes.join(visited, "node", "left").select(
-        "node", F.coalesce(F.col("hop"), F.lit(-1)).alias("hop")
-    )
-    return reach.groupBy("hop").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_customers"),
-        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_suppliers"),
-        F.min("node").alias("min_node"),
-    )
+    return _node_rollup(reach, "hop")
 
 
 # ----------------------------------------------------------------------
@@ -1102,33 +1029,12 @@ def _sssp_oracle() -> str:
         FROM d{i - 1} d JOIN edges e ON e.src = d.node
       ) GROUP BY node
     )""")
+    w = f"({SSSP_COST_NUM} + strength - 1) // strength"
     return f"""
-    WITH base AS (
-      SELECT o_custkey AS c, l_suppkey + {SUPP_OFFSET} AS s,
-             ({SSSP_COST_NUM} + COUNT(DISTINCT o_orderkey) - 1)
-               // COUNT(DISTINCT o_orderkey) AS w
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1, 2
-      HAVING COUNT(DISTINCT o_orderkey) >= {BFS_MIN_ORDERS}
-    ),
-    edges AS (
-      SELECT c AS src, s AS dst, w FROM base
-      UNION ALL
-      SELECT s AS src, c AS dst, w FROM base
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    d0 AS (
-      SELECT DISTINCT e.src AS node, 0 AS dist FROM edges e
-      JOIN customer ON c_custkey = e.src
-      WHERE c_nationkey = {BFS_SEED_NATION} AND e.src < {SUPP_OFFSET}
-    )
+    WITH {_strength_graph_sql(w)},
+    d0 AS (SELECT node, 0 AS dist FROM seeds)
     {"".join(steps)}
-    SELECT CAST(dist AS BIGINT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_suppliers,
-           MIN(node) AS min_node
+    SELECT CAST(dist AS BIGINT) AS dist, {_node_rollup_sql()}
     FROM (
       SELECT n.node, COALESCE(d.dist, -1) AS dist
       FROM nodes n LEFT JOIN d{SSSP_MAX_ROUNDS} d ON d.node = n.node
@@ -1140,22 +1046,28 @@ def _sssp_oracle() -> str:
 def sssp_rounds(
     seeds: DataFrame, edges: DataFrame, max_rounds: int
 ) -> DataFrame:
-    """Round-bounded multi-source weighted SSSP kernel (delta
-    Bellman–Ford) — the ``bfs_hops`` kernel generalized from hop counts
-    to min-cost paths (VERDICT r12 ask #5). ``seeds`` is a (node)
-    frame, ``edges`` a directed (src, dst, w) frame with non-negative
-    integer weights (pass both directions for an undirected walk);
-    returns (node, dist) = the exact minimum path cost over paths of
-    ≤ ``max_rounds`` edges (full shortest distances once the bound
-    reaches the shortest-path diameter — the hypothesis test pins
-    agreement with Dijkstra there). Each round relaxes ONLY the
-    frontier (nodes whose dist improved last round): one frontier⋈edges
-    equi-join (frontier broadcasts under ``PR_BROADCAST_NODES``, keyed
-    shuffle past it), one |V|-bounded candidate min, one full-outer
-    merge against the dist vector; dist localCheckpoints per round
-    (truncated lineage) and the early-stop probe counts an
-    already-materialized ≤|V|-row improved set, skipped on the final
-    round (the bfs_hops ADVICE r12 fix applied from birth)."""
+    """Round-bounded multi-source shortest-path kernel (delta
+    Bellman–Ford) — the one traversal kernel of this module. ``seeds``
+    is a (node) frame, ``edges`` a directed (src, dst, w) frame with
+    non-negative integer weights (pass both directions for an
+    undirected walk). Returns (node, dist): for every node some path of
+    ≤ ``max_rounds`` edges reaches, the exact minimum cost over such
+    paths — full shortest distances once the bound reaches the
+    shortest-path diameter. With every weight 1 this IS hop-bounded
+    BFS: the nodes improved in round r are exactly the nodes first
+    reached at hop r, so frontier, early stop and min-hop result are
+    BFS's (``x9_bfs_reach`` runs on it). The property tests pin both
+    readings: bounded Bellman–Ford and Dijkstra on weighted digraphs,
+    a queue BFS on unit weights.
+
+    Each round relaxes ONLY the frontier (nodes whose dist improved
+    last round): one frontier⋈edges equi-join (frontier broadcasts
+    under ``PR_BROADCAST_NODES``, keyed shuffle past it), one
+    |V|-bounded candidate min, one full-outer merge against the dist
+    vector. dist localCheckpoints per round (truncated lineage); the
+    early-stop probe counts the already-materialized ≤|V|-row improved
+    set and is skipped on the final round, whose answer it cannot
+    change."""
     dist = (
         seeds.select("node")
         .distinct()
@@ -1205,71 +1117,30 @@ def x9_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``x9_bfs_reach`` answers "within how many links"; this answers
     "at what minimum cost", with link cost inverse to trade strength:
     cost = ceil(``SSSP_COST_NUM``/strength), so taint/lineage flows
-    preferentially through strong relationships). Same seed set as BFS
-    (every in-graph customer of nation ``BFS_SEED_NATION``), same
-    ``BFS_MIN_ORDERS`` thinning; output is the per-cost reach rollup
-    (node counts, customer/supplier split, min member) with
-    never-reached nodes at dist -1. Reference scope: no graph ops in
-    the reference (440-line pandas ETL, weather_etl.py); §2.10
-    extension tier.
+    preferentially through strong relationships). Same seed set, same
+    ``BFS_MIN_ORDERS`` thinning and same kernel as BFS — only the
+    weight differs; output is the per-cost reach rollup (node counts,
+    customer/supplier split, min member) with never-reached nodes at
+    dist -1. Reference scope: no graph ops in the reference (440-line
+    pandas ETL, weather_etl.py); §2.10 extension tier.
 
-    Scale shape: the strength build is ONE partial-aggregated
-    (cust,supp) exchange (the x9_bfs_reach build, keeping the
-    countDistinct as the integer weight); edges localCheckpoint once,
-    shared by every round and the node universe. Each relaxation round
-    moves |frontier⋈edges| + |V| rows — the delta-Bellman–Ford linear
-    frontier shape, never the |V|² closure — and integer costs make
-    the result hash-exact with no float discipline needed. At 100 TB
-    the bound is rounds × (|E| + |V|) rows with rounds fixed by the
+    Scale shape: ``_strength_graph`` builds and checkpoints the
+    weighted edge list once. Each relaxation round moves
+    |frontier⋈edges| + |V| rows — the delta-Bellman–Ford linear
+    frontier shape, never the |V|² closure — and integer costs make the
+    result hash-exact with no float discipline needed. At 100 TB the
+    bound is rounds × (|E| + |V|) rows with rounds fixed by the
     propagation-depth policy, the same posture as BFS/PageRank/k-core."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    customer = load_table(spark, sf_dir, "customer")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("s"),
-        )
-        .agg(F.countDistinct("o_orderkey").alias("strength"))
-        .filter(F.col("strength") >= BFS_MIN_ORDERS)
-        .select(
-            "c",
-            "s",
-            F.expr(
-                f"CAST(({SSSP_COST_NUM} + strength - 1)"
-                " DIV strength AS LONG)"
-            ).alias("w"),
-        )
-    )
-    edges = base.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionAll(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
-    ).localCheckpoint(eager=True)
-    nodes = edges.select("src").distinct().select(F.col("src").alias("node"))
-    seeds = (
-        edges.filter(F.col("src") < SUPP_OFFSET)
-        .join(
-            customer.filter(
-                F.col("c_nationkey") == BFS_SEED_NATION
-            ).select(F.col("c_custkey").alias("src")),
-            "src",
-        )
-        .select(F.col("src").alias("node"))
-        .distinct()
+    edges, seeds, nodes = _strength_graph(
+        spark,
+        sf_dir,
+        F.expr(
+            f"CAST(({SSSP_COST_NUM} + strength - 1)"
+            " DIV strength AS LONG)"
+        ),
     )
     dist = sssp_rounds(seeds, edges, SSSP_MAX_ROUNDS)
     reach = nodes.join(dist, "node", "left").select(
         "node", F.coalesce(F.col("dist"), F.lit(-1)).alias("dist")
     )
-    return reach.groupBy("dist").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_customers"),
-        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_suppliers"),
-        F.min("node").alias("min_node"),
-    )
+    return _node_rollup(reach, "dist")
